@@ -53,9 +53,10 @@ object Pipeline {
           .write.mode("overwrite").parquet(s"$outDir/production/lineitems")
       },
       "quality_checks" -> { () =>
-        val checks = quality.Quality.qualityChecks(spark, sfDir)
-        checks.write.mode("overwrite").parquet(s"$outDir/quality/checks")
-        val score = quality.Quality.qualityScore(spark, sfDir).head()
+        quality.Quality.qualityChecks(spark, sfDir)
+          .write.mode("overwrite").parquet(s"$outDir/quality/checks")
+        val score = quality.Quality.qualityScoreOf(
+          spark.read.parquet(s"$outDir/quality/checks"), spark, sfDir).head()
         sources.Sources.writeJsonReport(
           s"""{"total_records":${score.getAs[Long]("total_records")},""" +
             s""""total_violations":${score.getAs[Long]("total_violations")},""" +

@@ -145,9 +145,14 @@ UNION ALL SELECT 'orders_without_items', 'referential_integrity',
     * by the actual record count rather than the reference's hard-coded
     * 50000 (validate_data.py:170) — documented deviation, SURVEY §7.4.
     */
-  def qualityScore(spark: SparkSession, dir: String): DataFrame = {
-    val viol = qualityChecks(spark, dir)
-      .agg(sum("violations").as("total_violations"))
+  def qualityScore(spark: SparkSession, dir: String): DataFrame =
+    qualityScoreOf(qualityChecks(spark, dir), spark, dir)
+
+  /** [[qualityScore]] over already-computed [[qualityChecks]] rows — the
+    * pipeline scores the checks it just wrote instead of running all
+    * twelve a second time. */
+  def qualityScoreOf(checks: DataFrame, spark: SparkSession, dir: String): DataFrame = {
+    val viol = checks.agg(sum("violations").as("total_violations"))
     val records = Tables.customer(spark, dir).agg(count(lit(1)).as("c"))
       .crossJoin(Tables.part(spark, dir).agg(count(lit(1)).as("p")))
       .crossJoin(Tables.orders(spark, dir).agg(count(lit(1)).as("o")))

@@ -54,6 +54,17 @@ import java.nio.file.Paths
   * Location: `GRAFT_INDEX_DIR` (default: a `graft-indexes` directory
   * under java.io.tmpdir), keyed by the canonical data directory — the
   * read-only source tables are never written to.
+  *
+  * Bucketed tables: a caller may declare a table hash-bucketed on one
+  * column (`bucketBy`). The build writes it with Spark's bucketed
+  * writer into `defaultParallelism` buckets, records that count in the
+  * manifest, and the serve path registers the stored files as an
+  * external `CLUSTERED BY` catalog table and serves `spark.table` —
+  * bucketing metadata lives only in the catalog, so a plain
+  * `spark.read.parquet` of the same files would plan a full exchange
+  * on the bucket key again. The count is read back from the manifest,
+  * never recomputed, so a session with a different core count serves
+  * the existing vintage instead of rebuilding it.
   */
 object IndexStore {
 
@@ -68,10 +79,7 @@ object IndexStore {
     val canon =
       if (dataDir.contains("://")) dataDir
       else Paths.get(dataDir).toAbsolutePath.normalize.toString
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(canon.getBytes(StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString.take(16)
-    s"$root/${canon.replaceAll("[^A-Za-z0-9._-]", "_").takeRight(48)}-$key/$name"
+    s"$root/${canon.replaceAll("[^A-Za-z0-9._-]", "_").takeRight(48)}-${digest(canon)}/$name"
   }
 
   /** Staleness fingerprint of one source table: an MD5 over the sorted
@@ -160,6 +168,12 @@ object IndexStore {
     served.keySet().asScala.toSet
   }
 
+  /** Test hook: drop this JVM's memo entries for one data directory, so
+    * the next call re-enters the manifest path the way a new session
+    * does. */
+  private[graft] def forgetServed(dataDir: String): Unit =
+    served.keySet().removeIf(_._2 == dataDir)
+
   private def fsOf(spark: SparkSession, path: String): FileSystem =
     new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -181,13 +195,15 @@ object IndexStore {
     * returned table into a temp directory, commit via manifest-last +
     * atomic directory rename, and read the tables back — so the caller
     * ALWAYS serves from the stored parquet (identical plans on the hit
-    * and miss paths). */
+    * and miss paths). `bucketBy` maps a table to the column it is stored
+    * bucketed on; tables it does not name are plain parquet. */
   def loadOrBuild(spark: SparkSession, dataDir: String, name: String,
-                  version: String, fingerprint: String, tables: Seq[String])
+                  version: String, fingerprint: String, tables: Seq[String],
+                  bucketBy: Map[String, String] = Map.empty)
                  (build: => Map[String, DataFrame]): Map[String, DataFrame] = {
     val appId = spark.sparkContext.applicationId
     val key = (appId, dataDir, name,
-      s"$version\n${tables.mkString(",")}", fingerprint)
+      s"$version\n${tables.mkString(",")}${layoutLine(tables, bucketBy)}", fingerprint)
     val hit = served.get(key)
     if (hit != null) return hit
     // Eviction on the miss path, two rules:
@@ -209,14 +225,26 @@ object IndexStore {
           _.sparkSession.sparkContext.isStopped))
     }
     val loaded = loadOrBuildUncached(spark, dataDir, name, version,
-      fingerprint, tables)(build)
+      fingerprint, tables, bucketBy)(build)
     served.put(key, loaded)
     loaded
   }
 
+  /** The manifest line declaring which tables are bucketed on which
+    * column; empty for an unbucketed store, whose manifest is unchanged. */
+  private def layoutLine(tables: Seq[String], bucketBy: Map[String, String]): String = {
+    val decl = tables.flatMap(t => bucketBy.get(t).map(c => s"$t:$c"))
+    if (decl.isEmpty) "" else decl.mkString("\nbucketBy=", ",", "")
+  }
+
+  /** Build-time fact recorded in the manifest after the identity lines:
+    * it does not take part in the hit test. */
+  private val BucketsKey = "buckets="
+
   private def loadOrBuildUncached(spark: SparkSession, dataDir: String,
                                   name: String, version: String,
-                                  fingerprint: String, tables: Seq[String])
+                                  fingerprint: String, tables: Seq[String],
+                                  bucketBy: Map[String, String])
                  (build: => Map[String, DataFrame]): Map[String, DataFrame] = {
     val dir = indexDir(dataDir, name)
     val lock = locks.computeIfAbsent(dir, _ => new Object)
@@ -240,9 +268,12 @@ object IndexStore {
         }
       }
       val manifest = new HPath(dirP, "_manifest")
-      val want = s"version=$version\nfingerprint=$fingerprint\ntables=${tables.mkString(",")}"
-      val hit = readManifest(fs, manifest).contains(want)
-      if (!hit) {
+      val want = s"version=$version\nfingerprint=$fingerprint\ntables=${tables.mkString(",")}" +
+        layoutLine(tables, bucketBy)
+      val stored = readManifest(fs, manifest)
+      val hit = stored.exists(_.linesIterator.filterNot(_.startsWith(BucketsKey))
+        .mkString("\n") == want)
+      val committed = if (hit) stored.get else {
         val built = build
         require(tables.forall(built.contains),
           s"index build for $name must produce ${tables.mkString(",")}; got ${built.keys.mkString(",")}")
@@ -251,10 +282,23 @@ object IndexStore {
         // never observes tables without their manifest or a mix of
         // vintages
         val tmpP = new HPath(s"$dir.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-        tables.foreach(t =>
-          built(t).write.mode("overwrite").parquet(new HPath(tmpP, t).toString))
+        val buckets = spark.sparkContext.defaultParallelism
+        tables.foreach { t =>
+          val out = new HPath(tmpP, t).toString
+          bucketBy.get(t) match {
+            case None => built(t).write.mode("overwrite").parquet(out)
+            case Some(c) =>
+              // bucketBy needs a catalog table: write through a throwaway
+              // EXTERNAL one, whose drop keeps the files
+              val tmpTable = s"graft_build_${java.util.UUID.randomUUID().toString.take(8)}"
+              try graft.sources.Sources.writeBucketed(built(t), tmpTable, out, Seq(c), buckets)
+              finally spark.sql(s"DROP TABLE IF EXISTS $tmpTable")
+          }
+        }
+        val manifestText =
+          if (bucketBy.isEmpty) want else s"$want\n$BucketsKey$buckets"
         val out = fs.create(new HPath(tmpP, "_manifest"), true)
-        try out.write(want.getBytes(StandardCharsets.UTF_8)) finally out.close()
+        try out.write(manifestText.getBytes(StandardCharsets.UTF_8)) finally out.close()
         // rename-ASIDE commit (not delete-then-rename): park the old
         // vintage under a unique .old name, swap the temp dir in, then
         // delete the parked copy — the destination is unoccupied for
@@ -280,8 +324,50 @@ object IndexStore {
         }
         if (parked && !fs.delete(oldP, true))
           System.err.println(s"[indexstore] could not delete parked vintage $oldP (swept at next entry)")
+        manifestText
       }
-      tables.map(t => t -> spark.read.parquet(new HPath(dirP, t).toString)).toMap
+      tables.map { t =>
+        val p = new HPath(dirP, t)
+        t -> bucketBy.get(t).fold(spark.read.parquet(p.toString)) { c =>
+          val buckets = committed.linesIterator.collectFirst {
+            case l if l.startsWith(BucketsKey) => l.drop(BucketsKey.length).toInt
+          }.getOrElse(throw new IllegalStateException(
+            s"index $dir declares $t bucketed but its manifest records no bucket count"))
+          serveBucketed(spark, fs, p, s"graft_store_${digest(s"$dir/$t")}", c, buckets)
+        }
+      }.toMap
     }
+  }
+
+  private def digest(s: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes(StandardCharsets.UTF_8))
+      .map("%02x".format(_)).mkString.take(16)
+
+  /** (Re-)register a stored bucketed table as an external catalog table
+    * and serve it from the catalog. Runs on every memo miss, so a
+    * rebuilt vintage never serves the file listing of the one it
+    * replaced. Every data file must carry a bucket id below the
+    * recorded count: a stray file would otherwise be read by plain
+    * scans but rejected (or, worse, skipped) by bucketed ones, so two
+    * queries over one table could disagree — refuse to serve instead.
+    * The column list is spelled out because Spark rejects `CLUSTERED
+    * BY` on a table whose schema is left to inference. */
+  private def serveBucketed(spark: SparkSession, fs: FileSystem, path: HPath,
+                            table: String, column: String, buckets: Int): DataFrame = {
+    val stray = fs.listStatus(path).map(_.getPath.getName)
+      .filterNot(n => n.startsWith("_") || n.startsWith("."))
+      .filterNot(n => org.apache.spark.sql.execution.datasources.BucketingUtils
+        .getBucketId(n).exists(_ < buckets))
+    if (stray.nonEmpty)
+      throw new IllegalStateException(
+        s"stored table $path is declared in $buckets buckets but holds files " +
+          s"outside them: ${stray.sorted.mkString(", ")}")
+    val schema = spark.read.parquet(path.toString).schema.toDDL
+    val location = path.toString.replace("\\", "\\\\").replace("'", "\\'")
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    spark.sql(s"CREATE TABLE $table ($schema) USING parquet " +
+      s"CLUSTERED BY ($column) INTO $buckets BUCKETS LOCATION '$location'")
+    spark.table(table)
   }
 }

@@ -20,6 +20,32 @@ class IndexStoreSpec extends SparkSpec {
   private def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
 
+  /** The catalog table a served bucketed handle reads. */
+  private def catalogTableOf(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.execution.datasources.LogicalRelation
+        if r.catalogTable.isDefined => r.catalogTable.get.identifier.table
+    }.getOrElse(fail(s"not served from the catalog:\n${df.queryExecution.analyzed}"))
+
+  /** Bucket count of the served table's scan — the planner's view. */
+  private def bucketsOf(df: org.apache.spark.sql.DataFrame): Option[Int] =
+    df.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        r.relation match {
+          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+            h.bucketSpec.map(_.numBuckets)
+          case _ => None
+        }
+    }.flatten
+
+  private def bucketedStore(dir: String, fp: String)
+                           (build: => Map[String, org.apache.spark.sql.DataFrame]) =
+    IndexStore.loadOrBuild(spark, dir, "bucket_probe", "v1", fp, Seq("t"),
+      bucketBy = Map("t" -> "k"))(build)("t")
+
+  private def rows(from: Long) = Map("t" ->
+    spark.range(from, from + 40).select(col("id").as("k"), (col("id") * 3).as("v")))
+
   test("a changed collection under the same path rebuilds the index") {
     val dir = java.nio.file.Files.createTempDirectory("idxstore").toString
     writeCorpus(dir, 0.0f)
@@ -107,5 +133,50 @@ class IndexStoreSpec extends SparkSpec {
     assert(IndexStore.servedKeys.exists(k =>
       k._2 == dir && k._3 == "memo_probe" && k._5 == "fpB"),
       "a miss on another index must not evict this session's live entries")
+  }
+
+  test("the served bucketed fact equals the fact build row for row") {
+    val served = warehouse.Warehouse.fact(spark, sf)
+    assert(bucketsOf(served).contains(spark.sparkContext.defaultParallelism),
+      "the fact must be served as a bucketed table")
+    assert(canon(served) == canon(warehouse.Warehouse.buildFact(spark, sf)))
+  }
+
+  test("a new session re-registers a bucketed table from the manifest without rebuilding") {
+    val dir = java.nio.file.Files.createTempDirectory("idxstore-bkt").toString
+    val first = bucketedStore(dir, "fpA")(rows(0))
+    val want = canon(first)
+    assert(bucketsOf(first).contains(spark.sparkContext.defaultParallelism))
+    // what a new session lacks: this JVM's serve memo and the catalog entry
+    IndexStore.forgetServed(dir)
+    spark.sql(s"DROP TABLE ${catalogTableOf(first)}")
+    val again = bucketedStore(dir, "fpA")(fail("a committed vintage must not rebuild"))
+    assert(canon(again) == want)
+    assert(bucketsOf(again) == bucketsOf(first),
+      "the bucket count comes from the manifest")
+  }
+
+  test("a stale manifest rebuilds, and the served table sees only the new files") {
+    val dir = java.nio.file.Files.createTempDirectory("idxstore-bkt-stale").toString
+    val old = bucketedStore(dir, "fpA")(rows(0))
+    val oldFiles = old.inputFiles.toSet
+    val fresh = bucketedStore(dir, "fpB")(rows(1000))
+    assert(canon(fresh) == canon(rows(1000)("t")))
+    assert(fresh.inputFiles.toSet.intersect(oldFiles).isEmpty,
+      "the rebuilt vintage must not list the replaced one's files")
+    assert(catalogTableOf(fresh) == catalogTableOf(old),
+      "a rebuild re-registers the same catalog entry instead of adding one")
+  }
+
+  test("a bucketed table holding a non-bucket file refuses to serve") {
+    val dir = java.nio.file.Files.createTempDirectory("idxstore-bkt-stray").toString
+    val served = bucketedStore(dir, "fpA")(rows(0))
+    val part = java.nio.file.Paths.get(new java.net.URI(served.inputFiles.head))
+    java.nio.file.Files.copy(part, part.resolveSibling("part-00000-stray.snappy.parquet"))
+    IndexStore.forgetServed(dir)
+    val e = intercept[IllegalStateException] {
+      bucketedStore(dir, "fpA")(fail("a committed vintage must not rebuild"))
+    }
+    assert(e.getMessage.contains("part-00000-stray.snappy.parquet"), e.getMessage)
   }
 }

@@ -170,7 +170,15 @@ class PipelineSpec extends SparkSpec {
     assert(report.steps.map(_.name) == Seq("stream_ingest_events",
       "cleanse_production", "quality_checks", "load_warehouse", "analytics",
       "monitoring", "curate_corpus", "retention_cleanup"))
-    assert(new java.io.File(s"$out/quality/quality_report.json").exists())
+    // the report scores the checks the step wrote: the same answer as
+    // qualityScore, whose oracle gates it
+    val score = quality.Quality.qualityScore(spark, sf).head()
+    val qualityReport = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(s"$out/quality/quality_report.json"))
+    assert(qualityReport == s"""{"total_records":${score.getAs[Long]("total_records")},""" +
+      s""""total_violations":${score.getAs[Long]("total_violations")},""" +
+      s""""quality_score":${score.getAs[Double]("quality_score")},""" +
+      s""""grade":"${score.getAs[String]("grade")}"}""", qualityReport)
     assert(spark.read.parquet(s"$out/warehouse/fact_sales").count() > 0)
     assert(new java.io.File(s"$out/analytics/q01_top_products").exists())
 

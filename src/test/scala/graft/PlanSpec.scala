@@ -12,19 +12,23 @@ class PlanSpec extends SparkSpec {
   private def physicalPlan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  /** Collect WindowExec nodes THROUGH the AQE wrappers — a bare
-    * `plan.collect` stops at AdaptiveSparkPlanExec and reports an empty
-    * list, silently making window-shape assertions vacuous. */
-  private def windowsOf(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.window.WindowExec] = p match {
-    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-      windowsOf(a.executedPlan)
-    case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-      windowsOf(s.plan)
-    case w: org.apache.spark.sql.execution.window.WindowExec =>
-      w +: w.children.flatMap(windowsOf)
-    case other => other.children.flatMap(windowsOf)
+  /** Every node of type `T` in a physical plan, walking THROUGH the AQE
+    * wrappers — a bare `plan.collect` stops at AdaptiveSparkPlanExec and
+    * reports an empty list, silently making shape assertions vacuous. */
+  private def nodesOf[T <: org.apache.spark.sql.execution.SparkPlan](
+      p: org.apache.spark.sql.execution.SparkPlan)(
+      implicit t: scala.reflect.ClassTag[T]): Seq[T] = {
+    val below = p match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: org.apache.spark.sql.execution.adaptive.QueryStageExec => Seq(s.plan)
+      case other => other.children
+    }
+    t.unapply(p).toSeq ++ below.flatMap(nodesOf[T](_))
   }
+
+  private def windowsOf(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.window.WindowExec] =
+    nodesOf[org.apache.spark.sql.execution.window.WindowExec](p)
 
   test("cleanse filters are pushed down to the parquet scan") {
     val plan = physicalPlan(Cleanse.cleanseProducts(spark, sf))
@@ -160,6 +164,48 @@ class PlanSpec extends SparkSpec {
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("ReusedExchange") || plan.contains("ReusedQueryStage"),
       s"q05 recomputes the fact aggregation for its grand totals:\n${plan.take(4000)}")
+  }
+
+  /** Scans of the stored fact: the only table served bucketed, on
+    * l_orderkey. */
+  private def factScans(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] =
+    nodesOf[org.apache.spark.sql.execution.FileSourceScanExec](df.queryExecution.executedPlan)
+      .filter(_.relation.bucketSpec.exists(_.bucketColumnNames == Seq("l_orderkey")))
+
+  test("order-grain consumers read the bucketed fact in place; the rest scan it plain") {
+    // the stored fact is bucketed on l_orderkey, so every collapse to
+    // order grain must group inside the buckets: a fact-wide exchange
+    // keyed by the order key here means the layout was lost (e.g. the
+    // fact served by path instead of through the catalog)
+    val orderGrain = Seq("q02_monthly_trend", "q05_payment_distribution",
+      "q07_customer_ltv", "q09_dow_pattern",
+      "agg_daily_sales", "agg_product_performance", "agg_customer_metrics",
+      "approx_monthly_transactions", "unpivot_daily_measures",
+      "window_customer_timeline", "window_trailing_30d")
+    orderGrain.foreach { q =>
+      val df = SparkEntry.queries(q)(spark, sf)
+      val exec = df.queryExecution.executedPlan
+      val orderKeyed = nodesOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec](exec)
+        .filter(_.outputPartitioning match {
+          case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+            h.expressions.exists(_.references.exists(_.name == "l_orderkey"))
+          case _ => false
+        })
+      assert(orderKeyed.isEmpty, s"$q shuffles the fact on the order key:\n${exec.toString.take(3000)}")
+      val scans = factScans(df)
+      assert(scans.nonEmpty && scans.forall(_.bucketedScan),
+        s"$q does not read the fact bucketed:\n${exec.toString.take(3000)}")
+    }
+    // queries that never group by order keep the plain scan (and its
+    // file-split parallelism): Spark drops the unneeded bucketed read
+    Seq("q01_top_products", "q04_category_performance",
+        "q08_product_profitability", "q10_discount_impact").foreach { q =>
+      val df = SparkEntry.queries(q)(spark, sf)
+      val scans = factScans(df)
+      assert(scans.nonEmpty && scans.forall(!_.bucketedScan),
+        s"$q reads the fact bucketed:\n${df.queryExecution.executedPlan.toString.take(3000)}")
+    }
   }
 
   test("rfm_segments serves ONE orders aggregation; the bounds cache never leaks") {
