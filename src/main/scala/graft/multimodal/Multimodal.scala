@@ -222,47 +222,19 @@ ph AS (
   val phashSql: String = s"WITH $phashCte\nSELECT doc_id, phash60 FROM ph"
 
   /** Near-duplicate payload pairs at Hamming distance ≤ 4 over the
-    * dHash — found EXACTLY via the pigeonhole banding: 5 disjoint
-    * 12-bit blocks, any ≤4-bit difference must agree on ≥1 block, so
-    * candidates come from block-equality joins (never all-pairs) and
-    * the exact Hamming filter keeps no false positives. Identical
+    * dHash — the pigeonhole banding of
+    * [[graft.sim.BandedPairs.hamming60Pairs]] (5 disjoint 12-bit
+    * blocks, block-equality candidates, exact Hamming verify). Identical
     * payloads (the corpus's exact-dup groups) land at Hamming 0, so
     * the row is output-bearing at the driver SFs. Hot cells beyond
     * [[PhashBucketCap]] drop from candidate generation (recall
     * semantics as in SimHash: a pair is lost only when every block it
     * agrees on is degenerate). */
   def phashPairs(spark: SparkSession, dir: String): DataFrame =
-    phashPairsOver(
+    graft.sim.BandedPairs.hamming60Pairs(
       phashOver(Tables.documents(spark, dir)
         .repartition(spark.sparkContext.defaultParallelism)),
-      PhashBucketCap)
-
-  /** Parameterized core over any (doc_id, phash60) frame (spec drives
-    * it with an adversarial constant-payload corpus and a tiny cap). */
-  private[graft] def phashPairsOver(sh: DataFrame, bucketCap: Int): DataFrame = {
-    val blocks = sh.select(col("doc_id"), col("phash60"),
-      posexplode(expr(
-        """array(phash60 & 4095,
-                 shiftright(phash60, 12) & 4095,
-                 shiftright(phash60, 24) & 4095,
-                 shiftright(phash60, 36) & 4095,
-                 shiftright(phash60, 48) & 4095)"""))
-        .as(Seq("block", "block_bits")))
-    val hot = blocks.groupBy("block", "block_bits")
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") > bucketCap)
-      .select("block", "block_bits")
-    val kept = blocks.join(broadcast(hot), Seq("block", "block_bits"), "left_anti")
-    kept.as("a")
-      .join(kept.as("b"),
-        col("a.block") === col("b.block") &&
-          col("a.block_bits") === col("b.block_bits") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        expr("bit_count(a.phash60 ^ b.phash60)").cast("long").as("hamming"))
-      .filter(col("hamming") <= 4)
-      .dropDuplicates("doc_a", "doc_b")
-  }
+      "phash60", PhashBucketCap)
 
   val phashPairsSql: String = s"""
 WITH $phashCte,

@@ -312,10 +312,10 @@ FROM s GROUP BY bucket"""
       val masses = e
         .select(graft.functions.SrpSig64.of(col("embedding")).as("sig"))
         .repartition(e.sparkSession.sparkContext.defaultParallelism)
-        .select(col("sig"), explode(array(rb.map { case (r, b) =>
-          struct(lit(r).as("r"), lit(b).as("band")) }: _*)).as("rb"))
-        .selectExpr("rb.r as r", "rb.band as band",
-          "cast(shiftright(sig, rb.band * rb.r) & (shiftleft(cast(1 as bigint), rb.r) - 1) as bigint) as bucket")
+        .select(explode(array(rb.map { case (r, b) =>
+          struct(lit(r).as("r"), lit(b).as("band"),
+            BandedPairs.srpBucket(col("sig"), lit(b), r).as("bucket")) }: _*)).as("rb"))
+        .select("rb.*")
         .groupBy("r", "band", "bucket").agg(count(lit(1)).as("c"))
         .groupBy("r").agg(sum(expr(
           s"if(c > $LshBucketCap, cast(0 as bigint), c * (c - 1) div 2)")).as("mass"))
@@ -378,65 +378,37 @@ FROM s GROUP BY bucket"""
 
   /** Core over any (vec_id, embedding) frame — the spec drives it with
     * an adversarial near-constant corpus and a tiny cap
-    * (AnnLshCapSpec), mirroring the text side's
-    * [[graft.text.TextOps.simhashPairsOverDocs]]. */
+    * (AnnLshCapSpec); banding, hot-cell cap and the same-cell join are
+    * [[BandedPairs]]. */
   private[graft] def annLshNearDupPairsOver(e: DataFrame,
                                             bands: Int, rows: Int,
                                             threshold: Double,
                                             bucketCap: Int): DataFrame = {
-    require(bands >= 1 && rows >= 1 && bands * rows <= 64,
-      s"need bands >= 1, rows >= 1, bands*rows <= 64; got $bands x $rows " +
-        "(rows = 0 would mask every bucket to 0 and degenerate to all-pairs)")
     // repartition: a single-file embeddings input is ONE partition, and
     // Spark broadcast-joins the (small) build side — leaving the entire
     // multi-million-pair join output to be computed in a single probe
     // task (measured: one 350s serial task at the 10× rung). Same
     // single-file guard as embeddingNearDupPairs / dedupMinhashLsh.
-    //
-    // The signature is computed BELOW that exchange and the vec_id-null
-    // filter (a no-op: vec_id is the collection's primary key, and a
-    // null id could never pair anyway — the candidate join's a.vec_id <
-    // b.vec_id drops it) is made explicit, so the hot-cell count pass
-    // and the kept pair stream consume IDENTICAL (vec_id, sig) rows and
-    // the planner's ReusedExchange collapses them onto ONE scan + ONE
-    // shuffle of 16-byte rows. The previous form scanned + round-robin-
-    // shuffled the full embedding ARRAYS once per branch (hot, kept, and
-    // the rescore side: 3 scans, 3 wide exchanges, SrpSig evaluated
-    // twice) because each branch's column pruning specialized the
-    // exchange subtree past recognition. `hot` counts vec_id — not
-    // lit(1) — for the same reason: pruning the id off the count side
-    // would re-split the shared exchange. §2.3 (shuffle fewer bytes) +
-    // §2.4 (one exchange, reused).
-    val ein = e.filter(col("vec_id").isNotNull)
-      .select(col("vec_id"),
-        graft.functions.SrpSig64.of(col("embedding")).as("sig"))
+    // The signature is computed BELOW that exchange, so the hot-cell
+    // count and the pair stream share ONE scan + ONE shuffle of 16-byte
+    // (vec_id, sig) rows instead of the embedding arrays (§2.3, §2.4).
+    val sigs = e
+      .select(col("vec_id"), graft.functions.SrpSig64.of(col("embedding")).as("sig"))
       .repartition(e.sparkSession.sparkContext.defaultParallelism)
-    val banded = ein
-      .select(col("vec_id"),
-        explode(sequence(lit(0), lit(bands - 1))).as("band"), col("sig"))
-      .selectExpr("vec_id", "band",
-        // 1L shift: (1 << 32) == 1 in Int, which would mask every bucket
-        // to 0 and silently degenerate the join to all-pairs; bucket is
-        // BIGINT because rows can legitimately reach 64
-        s"cast(shiftright(sig, band * $rows) & ${if (rows == 64) -1L else (1L << rows) - 1} as bigint) as bucket")
-    val hot = banded.groupBy("band", "bucket")
-      .agg(count(col("vec_id")).as("df"))
-      .filter(col("df") > bucketCap)
-      .select("band", "bucket")
-    val kept = banded.join(broadcast(hot), Seq("band", "bucket"), "left_anti")
-    val cand = kept.as("a")
-      .join(kept.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") < col("b.vec_id"))
+    val cand = BandedPairs.pairs(BandedPairs.srpBands(sigs, bands, rows),
+        "vec_id", Seq("band", "bucket"), bucketCap)
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
       .distinct()
     // rescore side reads the arrays straight off the source: it joins by
     // vec_id (broadcast under the budget, key-shuffle past it), so the
-    // round-robin exchange the banding needs would be pure overhead here
+    // round-robin exchange the banding needs would be pure overhead here.
+    // Null-safe keys: candidate ids are never NULL, and `===` would let
+    // the planner push an inferred isnotnull(vec_id) below the banding
+    // exchange on the pair branch only, splitting the shared exchange.
     val n = e.select(col("vec_id"), col("embedding"), normN("embedding").as("nrm"))
     cand
-      .join(n.as("x"), col("vec_a") === col("x.vec_id"))
-      .join(n.as("y"), col("vec_b") === col("y.vec_id"))
+      .join(n.as("x"), col("vec_a") <=> col("x.vec_id"))
+      .join(n.as("y"), col("vec_b") <=> col("y.vec_id"))
       .select(col("vec_a"), col("vec_b"),
         (dotN("x.embedding", "y.embedding") / (col("x.nrm") * col("y.nrm")))
           .as("cosine"))
@@ -564,6 +536,14 @@ WHERE CAST(list_sum(list_transform(generate_series(1, len(x.embedding)),
 
   // ------------------------------------------- bounded-state dedup reps
 
+  /** (vec_id, embedding, sig) over `e` round-robin-repartitioned — the
+    * banding input of the in-cell (groupByKey) SRP consumers, which need
+    * the arrays inside each cell. */
+  private def signedEmbeddings(e: DataFrame): DataFrame =
+    e.repartition(e.sparkSession.sparkContext.defaultParallelism)
+      .select(col("vec_id"), col("embedding"),
+        graft.functions.SrpSig64.of(col("embedding")).as("sig"))
+
   /** Spanning-star edges of the dedup similarity graph, ONE per
     * (kept LSH cell, member beyond its local component's min) — the
     * bounded-state input [[annDedupRepsOver]] feeds connected
@@ -602,24 +582,11 @@ WHERE CAST(list_sum(list_transform(generate_series(1, len(x.embedding)),
                                          bands: Int, rows: Int,
                                          threshold: Double,
                                          bucketCap: Int): DataFrame = {
-    require(bands >= 1 && rows >= 1 && bands * rows <= 64,
-      s"need bands >= 1, rows >= 1, bands*rows <= 64; got $bands x $rows")
     val spark = e.sparkSession
     import spark.implicits._
-    val ein = e.repartition(spark.sparkContext.defaultParallelism)
-    val banded = ein
-      .select(col("vec_id"), col("embedding"),
-        graft.functions.SrpSig64.of(col("embedding")).as("sig"))
-      .select(col("vec_id"), col("embedding"),
-        explode(sequence(lit(0), lit(bands - 1))).as("band"), col("sig"))
-      .selectExpr("vec_id", "embedding", "band",
-        s"cast(shiftright(sig, band * $rows) & ${if (rows == 64) -1L else (1L << rows) - 1} as bigint) as bucket")
-    val hot = banded.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") > bucketCap)
-      .select("band", "bucket")
-    val kept = banded.join(broadcast(hot), Seq("band", "bucket"), "left_anti")
-    kept.select(col("band"), col("bucket"), col("vec_id"), col("embedding"))
+    val banded = BandedPairs.srpBands(signedEmbeddings(e), bands, rows)
+    BandedPairs.dropHot(banded, "vec_id", Seq("band", "bucket"), bucketCap)
+      .select(col("band"), col("bucket"), col("vec_id"), col("embedding"))
       .as[(Int, Long, Long, Array[Float])]
       .groupByKey { case (band, bucket, _, _) => (band, bucket) }
       .flatMapGroups { (_: (Int, Long), it: Iterator[(Int, Long, Long, Array[Float])]) =>
@@ -831,35 +798,19 @@ FROM rch r JOIN sizes s ON r.label = s.cluster_id"""
                                            bands: Int, rows: Int,
                                            threshold: Double,
                                            bucketCap: Int): DataFrame = {
-    require(bands >= 1 && rows >= 1 && bands * rows <= 64,
-      s"need bands >= 1, rows >= 1, bands*rows <= 64; got $bands x $rows")
     val spark = e.sparkSession
     import spark.implicits._
-    val mask = if (rows == 64) -1L else (1L << rows) - 1
-    val ein = e.repartition(spark.sparkContext.defaultParallelism)
-    val banded = ein
-      .select(col("vec_id"), col("embedding"),
-        graft.functions.SrpSig64.of(col("embedding")).as("sig"))
-      .select(col("vec_id"), col("embedding"), col("sig"),
-        explode(sequence(lit(0), lit(bands - 1))).as("band"))
-      .selectExpr("vec_id", "embedding", "sig", "band",
-        s"cast(shiftright(sig, band * $rows) & $mask as bigint) as bucket")
+    val cell = Seq("band", "bucket")
+    val banded = BandedPairs.srpBands(signedEmbeddings(e), bands, rows)
     // hot cells collected ONCE: ≤ n·bands/cap entries (each holds > cap
     // of the n·bands banded rows) — bounded driver state in the
     // codebook/centroid class, reused for both the kept-filter and the
     // in-cell attribution
-    val hotSet: Set[(Int, Long)] = banded.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") > bucketCap)
-      .select("band", "bucket")
+    val hotSet: Set[(Int, Long)] = BandedPairs.hotCells(banded, "vec_id", cell, bucketCap)
       .as[(Int, Long)].collect().toSet
     val hotB = spark.sparkContext.broadcast(hotSet)
-    val kept =
-      if (hotSet.isEmpty) banded
-      else banded.join(
-        broadcast(hotSet.toSeq.toDF("band", "bucket")),
-        Seq("band", "bucket"), "left_anti")
-    kept.select(col("band"), col("bucket"), col("vec_id"), col("embedding"),
+    BandedPairs.dropCells(banded, hotSet.toSeq.toDF("band", "bucket"), cell)
+      .select(col("band"), col("bucket"), col("vec_id"), col("embedding"),
         col("sig"))
       .as[(Int, Long, Long, Array[Float], Long)]
       .groupByKey { case (band, bucket, _, _, _) => (band, bucket) }
@@ -874,7 +825,7 @@ FROM rch r JOIN sizes s ON r.label = s.cluster_id"""
         else {
           // per-member sub-bucket per band, from the full signature
           val sub = Array.tabulate(n, bands)((i, b) =>
-            (ms(i)._3 >>> (b * rows)) & mask)
+            BandedPairs.srpBucketOf(ms(i)._3, b, rows))
           val q = ms.map { case (_, emb, _) =>
             val a = new Array[Long](emb.length)
             var i = 0

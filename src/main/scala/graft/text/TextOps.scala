@@ -878,23 +878,15 @@ FROM c"""
 
   /** Parameterized core over any (doc_id, text) frame — the spec drives
     * it with an adversarial single-signature corpus and a tiny cap
-    * (MinhashCapSpec), mirroring [[simhashPairsOverDocs]]. Carrying mhs
-    * through the band join (instead of joining sigs back per side)
-    * evaluates the md5 signature subtree once per side instead of three
-    * times; graft.functions.MinHashSig is the compiled twin of the
+    * (MinhashCapSpec); banding, hot-cell cap and the same-cell join are
+    * [[graft.sim.BandedPairs]]. Carrying mhs through the band join
+    * (instead of joining sigs back per side) evaluates the md5 signature
+    * subtree once per side instead of three times;
+    * graft.functions.MinHashSig is the compiled twin of the
     * higher-order-function formulation in [[minhashE]] (kept above as
     * the executable spec) — same md5-derived values, ~4x faster. */
-  private[graft] def minhashPairsOverDocs(d: DataFrame, bucketCap: Int): DataFrame = {
-    val bands = minhashBands(d)
-    val hot = bands.groupBy("band", "band_hash")
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") > bucketCap)
-      .select("band", "band_hash")
-    val kept = bands.join(broadcast(hot), Seq("band", "band_hash"), "left_anti")
-    kept.as("a")
-      .join(kept.as("b"),
-        col("a.band") === col("b.band") && col("a.band_hash") === col("b.band_hash")
-          && col("a.doc_id") < col("b.doc_id"))
+  private[graft] def minhashPairsOverDocs(d: DataFrame, bucketCap: Int): DataFrame =
+    graft.sim.BandedPairs.pairs(minhashBands(d), "doc_id", Seq("band", "band_hash"), bucketCap)
       // score BEFORE deduplicating the multi-band candidates: a pair's
       // est_jaccard is the same from whichever band certified it, so
       // max() over the pair group is the one shared value — and unlike
@@ -907,7 +899,6 @@ FROM c"""
           / lit(16.0)).as("est_jaccard"))
       .groupBy("doc_a", "doc_b")
       .agg(max(col("est_jaccard")).as("est_jaccard"))
-  }
 
   /** Shared DuckDB CTE block reproducing [[minhashBands]]'s
     * tokens → shingles → 16-hash signature → 4 band hashes, used by both
@@ -963,8 +954,10 @@ FROM cand JOIN mh x ON doc_a = x.doc_id JOIN mh y ON doc_b = y.doc_id"""
     val src = docs(spark, dir).select(col("doc_id"), col("source"))
     dedupMinhashLsh(spark, dir)
       .filter(col("est_jaccard") >= SourceMatrixJaccard)
-      .join(src.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(src.as("sb"), col("doc_b") === col("sb.doc_id"))
+      // null-safe keys keep the banding exchange shared (see
+      // graft.sim.BandedPairs); pair ids are never NULL
+      .join(src.as("sa"), col("doc_a") <=> col("sa.doc_id"))
+      .join(src.as("sb"), col("doc_b") <=> col("sb.doc_id"))
       .select(
         least(col("sa.source"), col("sb.source")).as("source_a"),
         greatest(col("sa.source"), col("sb.source")).as("source_b"),
@@ -1032,39 +1025,16 @@ GROUP BY 1, 2 ORDER BY 1, 2"""
   val SimhashBucketCap = 200
 
   def dedupSimhashPairs(spark: SparkSession, dir: String): DataFrame =
-    simhashPairsOverDocs(
-      docs(spark, dir).repartition(spark.sparkContext.defaultParallelism),
-      SimhashBucketCap)
+    graft.sim.BandedPairs.hamming60Pairs(
+      simhashOver(docs(spark, dir).repartition(spark.sparkContext.defaultParallelism)),
+      "simhash60", SimhashBucketCap)
 
-  /** Parameterized core over any (doc_id, text) frame — the spec drives
-    * it with an adversarial single-simhash corpus and a tiny cap
-    * (SimhashCapSpec), mirroring [[jaccardPairsOverShingles]]. */
-  private[graft] def simhashPairsOverDocs(d: DataFrame, bucketCap: Int): DataFrame = {
-    val sh = d.select(col("doc_id"),
+  /** (doc_id, simhash60) over any (doc_id, text) frame — the spec drives
+    * the pair core with it over an adversarial single-simhash corpus and
+    * a tiny cap (SimhashCapSpec). */
+  private[graft] def simhashOver(d: DataFrame): DataFrame =
+    d.select(col("doc_id"),
       graft.functions.SimHashSig.of(expr(contentToksE)).as("simhash60"))
-    // blocks: five exact 12-bit slices [0-11], [12-23], ..., [48-59]
-    val blocks = sh.select(col("doc_id"), col("simhash60"),
-      posexplode(expr(
-        """array(simhash60 & 4095,
-                 shiftright(simhash60, 12) & 4095,
-                 shiftright(simhash60, 24) & 4095,
-                 shiftright(simhash60, 36) & 4095,
-                 shiftright(simhash60, 48) & 4095)"""))
-        .as(Seq("block", "block_bits")))
-    val hot = blocks.groupBy("block", "block_bits")
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") > bucketCap)
-      .select("block", "block_bits")
-    val kept = blocks.join(broadcast(hot), Seq("block", "block_bits"), "left_anti")
-    kept.as("a")
-      .join(kept.as("b"),
-        col("a.block") === col("b.block") && col("a.block_bits") === col("b.block_bits")
-          && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        expr("bit_count(a.simhash60 ^ b.simhash60)").cast("long").as("hamming"))
-      .filter(col("hamming") <= 4)
-      .dropDuplicates("doc_a", "doc_b")
-  }
 
   private val dedupSimhashPairsSqlRaw: String = """
 WITH tok AS (SELECT doc_id,

@@ -1,6 +1,7 @@
 package graft
 
 import graft.multimodal.Multimodal
+import graft.sim.BandedPairs
 import org.apache.spark.sql.functions._
 
 /** The perceptual-hash (dHash) payload dedup: gradient-sign hashing of
@@ -25,7 +26,7 @@ class PhashSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(hashes(1L) == hashes(2L))
     assert(hashes(1L) >= 0L, "60-bit hash must be non-negative")
-    val pairs = Multimodal.phashPairsOver(Multimodal.phashOver(d), 200)
+    val pairs = BandedPairs.hamming60Pairs(Multimodal.phashOver(d), "phash60", 200)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(pairs.contains((1L, 2L, 0L)), s"clone pair missing from $pairs")
     assert(pairs.forall { case (a, b, _) => (a, b) == ((1L, 2L)) },
@@ -38,7 +39,7 @@ class PhashSpec extends SparkSpec {
     val base = payload(4)
     val edited = base.updated(40, if (base(40) == 'z') 'a' else 'z')
     val d = Seq((1L, base), (2L, edited)).toDF("doc_id", "text")
-    val pairs = Multimodal.phashPairsOver(Multimodal.phashOver(d), 200)
+    val pairs = BandedPairs.hamming60Pairs(Multimodal.phashOver(d), "phash60", 200)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(pairs.length == 1 && pairs.head._3 <= 2L,
       s"edited payload should pair at Hamming <= 2, got $pairs")
@@ -79,9 +80,9 @@ class PhashSpec extends SparkSpec {
     val other = Seq((301L, payload(6)), (302L, payload(6)))
     val d = (pile ++ other).toDF("doc_id", "text")
     val sh = Multimodal.phashOver(d)
-    val uncapped = Multimodal.phashPairsOver(sh, Int.MaxValue).count()
+    val uncapped = BandedPairs.hamming60Pairs(sh, "phash60", Int.MaxValue).count()
     assert(uncapped > 11000, s"expected ~C(150,2)+1 uncapped, got $uncapped")
-    val capped = Multimodal.phashPairsOver(sh, 50).collect()
+    val capped = BandedPairs.hamming60Pairs(sh, "phash60", 50).collect()
     assert(capped.length < 50, s"cap did not bound the join: ${capped.length}")
     assert(capped.exists(r =>
       r.getLong(0) == 301L && r.getLong(1) == 302L && r.getLong(2) == 0L),
@@ -98,8 +99,8 @@ class PhashSpec extends SparkSpec {
       .select("doc_id", "text")
     val hashes = Multimodal.phashOver(docs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val pairs = Multimodal.phashPairsOver(
-      Multimodal.phashOver(docs), Multimodal.PhashBucketCap)
+    val pairs = BandedPairs.hamming60Pairs(
+      Multimodal.phashOver(docs), "phash60", Multimodal.PhashBucketCap)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val planted = (0 until 10).flatMap { p =>
       val b = p * 50L + 10

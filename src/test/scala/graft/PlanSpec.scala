@@ -450,18 +450,23 @@ class PlanSpec extends SparkSpec {
     try physicalPlan(build) finally spark.conf.set(key, prev)
   }
 
-  test("ann_lsh pair core: one shared banding exchange, two embeddings scans") {
+  test("banded pair families: one shared banding exchange, bounded source scans") {
     // hot-cell counting and the kept pair stream must consume the SAME
-    // (vec_id, sig) exchange (ReusedExchange) — the pre-r17 shape
-    // scanned and round-robin-shuffled the full embedding arrays once
-    // per branch (3 scans, 3 wide exchanges, SrpSig evaluated twice).
-    // Only the banding pass and the rescore side may read the source.
-    Seq("ann_lsh_near_dup_pairs_demo", "ann_lsh_dedup_pairs_t45").foreach { name =>
+    // banding exchange (ReusedExchange); otherwise each branch scans and
+    // round-robin-shuffles the source on its own. The SRP families may
+    // read the source once more for the exact rescore side.
+    Seq(
+      ("ann_lsh_near_dup_pairs_demo", "embeddings", 2),
+      ("ann_lsh_dedup_pairs_t45", "embeddings", 2),
+      ("dedup_simhash_pairs", "documents", 1),
+      ("multimodal_phash_pairs", "documents", 1),
+      ("dedup_minhash_lsh", "documents", 1)
+    ).foreach { case (name, source, maxScans) =>
       val plan = staticPlan(SparkEntry.queries(name)(spark, sf))
       val scans = plan.linesIterator.count(l =>
-        l.contains("FileScan") && l.contains("embeddings"))
-      assert(scans <= 2,
-        s"$name reads embeddings $scans times (banding exchange not shared):\n${plan.take(3000)}")
+        l.contains("FileScan") && l.contains(source))
+      assert(scans <= maxScans,
+        s"$name reads $source $scans times (banding exchange not shared):\n${plan.take(3000)}")
       assert(plan.contains("ReusedExchange"),
         s"$name lost the shared banding exchange:\n${plan.take(3000)}")
     }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.sim.BandedPairs
 import graft.text.TextOps
 import org.apache.spark.sql.functions._
 
@@ -19,8 +20,8 @@ class SimhashCapSpec extends SparkSpec {
           (302L, "the quick brown fox jumps over the lazy dog tonight"))
     val d = docs.toDF("doc_id", "text")
 
-    val uncapped = TextOps.simhashPairsOverDocs(d, Int.MaxValue).count()
-    val capped = TextOps.simhashPairsOverDocs(d, 50)
+    val uncapped = BandedPairs.hamming60Pairs(TextOps.simhashOver(d), "simhash60", Int.MaxValue).count()
+    val capped = BandedPairs.hamming60Pairs(TextOps.simhashOver(d), "simhash60", 50)
     assert(uncapped > 19000, s"expected ~C(200,2) pairs uncapped, got $uncapped")
     // the hot pile is dropped wholesale (the documented recall
     // tradeoff: such piles are exact-dedup territory, not banding
